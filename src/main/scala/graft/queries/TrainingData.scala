@@ -148,16 +148,8 @@ object TrainingData {
   /** Both extraction queries need the same generated corpus + sidecars;
     * memoized per session so the second query reuses the first's work
     * (the generation is deterministic, so the skipped re-write would be
-    * byte-identical anyway). A size-2 LRU, not a WeakHashMap: the
-    * Dataset value strongly references its SparkSession key, which
-    * would pin weak keys forever — bounded eviction is the honest
-    * lifetime policy for a JVM that cycles sessions. */
-  private val genMemo =
-    new java.util.LinkedHashMap[SparkSession, Dataset[graft.core.TurnInput]](4, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[SparkSession, Dataset[graft.core.TurnInput]]): Boolean =
-        size() > 2
-    }
+    * byte-identical anyway). */
+  private val genMemo = new SessionMemo[SparkSession, Dataset[graft.core.TurnInput]](2)
 
   /** Memoized deterministic synthetic corpus per (session, size,
     * parallelism): a dozen conversation-analytics queries each need
@@ -167,51 +159,28 @@ object TrainingData {
     * localCheckpoint'd so each query's sidecar write + compute reads
     * materialized rows; generation is deterministic, so results are
     * byte-identical either way (same discipline as genMemo). */
-  private val synthMemo =
-    new java.util.LinkedHashMap[(SparkSession, Long, Int), Dataset[graft.core.TurnInput]](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Long, Int), Dataset[graft.core.TurnInput]]): Boolean = {
-        val evict = size() > 4
-        if (evict) scala.util.Try(e.getValue.unpersist(false))
-        evict
-      }
-    }
+  private val synthMemo = new SessionMemo[(SparkSession, Long, Int), Dataset[graft.core.TurnInput]](4)
 
   private def synthShared(s: SparkSession, n: Long, parts: Int): Dataset[graft.core.TurnInput] =
-    synthMemo.synchronized {
-      val key = (s, n, parts)
-      val hit = synthMemo.get(key)
-      if (hit != null) hit
-      else {
-        val d = graft.pipeline.Pipeline.synthTurns(s, n, parts).localCheckpoint(true)
-        synthMemo.put(key, d)
-        d
-      }
-    }
+    synthMemo((s, n, parts))(graft.pipeline.Pipeline.synthTurns(s, n, parts).localCheckpoint(true))
 
   private def genWithSidecar(s: SparkSession): Dataset[graft.core.TurnInput] =
-    genMemo.synchronized {
-      val cached = genMemo.get(s)
-      if (cached != null) cached
-      else {
-        import s.implicits._
-        // checkpoint: the generator otherwise re-renders the corpus on
-        // every downstream action (two sidecar writes here + every
-        // extraction consumer)
-        val gen = graft.pipeline.Pipeline.synthWithExpected(s, nConvs, 8)
-          .localCheckpoint(true)
-        val expected = gen.select(col("_2.*"))
-        flat(expected).coalesce(1)
-          .write.mode("overwrite").parquet(expectedTurnsPath)
-        expected.filter(col("errors").isNotNull)
-          .select(col("conv_id"), col("turn_idx"), explode(col("errors")).as("error"))
-          .orderBy(col("conv_id"), col("turn_idx"), col("error"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(expectedErrorsPath)
-        val turns = gen.select(col("_1.*")).as[graft.core.TurnInput]
-        genMemo.put(s, turns)
-        turns
-      }
+    genMemo(s) {
+      import s.implicits._
+      // checkpoint: the generator otherwise re-renders the corpus on
+      // every downstream action (two sidecar writes here + every
+      // extraction consumer)
+      val gen = graft.pipeline.Pipeline.synthWithExpected(s, nConvs, 8)
+        .localCheckpoint(true)
+      val expected = gen.select(col("_2.*"))
+      flat(expected).coalesce(1)
+        .write.mode("overwrite").parquet(expectedTurnsPath)
+      expected.filter(col("errors").isNotNull)
+        .select(col("conv_id"), col("turn_idx"), explode(col("errors")).as("error"))
+        .orderBy(col("conv_id"), col("turn_idx"), col("error"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(expectedErrorsPath)
+      gen.select(col("_1.*")).as[graft.core.TurnInput]
     }
 
   /** The Iceberg-lite merge/time-travel/CDC story as ORACLED queries:
@@ -226,11 +195,7 @@ object TrainingData {
     * share one build. */
   private case class TableBuild(root: String, snapWave1: Int, snapPre: Int,
     snapPost: Int, snapDel: Int, snapPub: Int, snapMor: Int, snapRw: Int)
-  private val tableMemo =
-    new java.util.LinkedHashMap[SparkSession, TableBuild](4, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[SparkSession, TableBuild]): Boolean = size() > 2
-    }
+  private val tableMemo = new SessionMemo[SparkSession, TableBuild](2)
 
   private def deleteRec(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
@@ -241,116 +206,110 @@ object TrainingData {
     }
 
   private def buildMergeTable(s: SparkSession): TableBuild =
-    tableMemo.synchronized {
-      val cached = tableMemo.get(s)
-      if (cached != null) cached
-      else {
-        import s.implicits._
-        import graft.io.TableIO
-        // checkpoint: the two wave writes + merge below each action
-        // this Dataset; un-cut, every one re-runs the full extraction
-        val extracted = graft.pipeline.Pipeline
-          .extractTurnsSalted(genWithSidecar(s), 32)
-          .localCheckpoint(true)
-        deleteRec(java.nio.file.Paths.get(tablePath))
-        TableIO.writeExtracted(extracted, tablePath, buckets = 8, waves = 2,
-          stopAfterWaves = 1)
-        val (snapWave1, _) = TableIO.committed(tablePath)
-        TableIO.writeExtracted(extracted, tablePath, buckets = 8, waves = 2)
-        val (snapPre, _) = TableIO.committed(tablePath)
-        // pre-merge sidecars (oracle inputs) — dumped before the merge
-        flat(TableIO.readExtracted(s, tablePath).toDF).coalesce(1)
-          .write.mode("overwrite").parquet(tableInitialPath)
-        flat(TableIO.readExtracted(s, tablePath, snapWave1).toDF).coalesce(1)
-          .write.mode("overwrite").parquet(tableWave1Path)
-        // the corrected subset: every conv whose hash lands in class 0
-        // (deterministic, ~1/4 of convs), score corrected +1000
-        val updates = TableIO.readExtracted(s, tablePath)
-          .filter(pmod(xxhash64(col("conv_id")), lit(4)) === 0)
-          .map(t => t.copy(total_score = t.total_score + 1000))
-        flat(updates.toDF).coalesce(1)
-          .write.mode("overwrite").parquet(tableUpdatesPath)
-        TableIO.mergeExtracted(updates, tablePath, buckets = 8)
-        val (snapPost, _) = TableIO.committed(tablePath)
-        // named refs on the same build: tag the pre-merge snapshot
-        // (time travel by name), and branch at the post-merge head with
-        // a branch-only corrected subset (hash class 1 — disjoint from
-        // the merge's class 0), dumped BEFORE the branch merge so the
-        // oracle composes the branch state independently
-        TableIO.tagSnapshot(tablePath, "pre-merge", snapPre)
-        TableIO.createBranch(tablePath, "exp", snapPost)
-        val branchUpdates = TableIO.readExtracted(s, tablePath)
-          .filter(pmod(xxhash64(col("conv_id")), lit(4)) === 1)
-          .map(t => t.copy(total_score = t.total_score + 5000))
-        flat(branchUpdates.toDF).coalesce(1)
-          .write.mode("overwrite").parquet(tableBranchUpdatesPath)
-        TableIO.mergeIntoBranch(branchUpdates, tablePath, "exp", buckets = 8)
-        // schema evolution BEFORE the delete: sinceSnapshot = snapPost,
-        // so the post-delete snapshot q_table_evolve pins (snapDel)
-        // already projects the added column — and the as-of read
-        // exercises the evolved-schema time-travel path THROUGH the
-        // later WAP publish
-        TableIO.evolveSchema(tablePath, "quality_tier", "STRING", "'unscored'")
-        // row-level DELETE on main (right-to-be-forgotten shape): every
-        // conv in hash class 2 — disjoint from the merge's class 0 and
-        // the branch's class 1 — with the key set dumped BEFORE the
-        // delete so the oracle anti-joins it independently. Runs LAST:
-        // q_table_merge then reads as-of snapPost (time travel THROUGH
-        // the delete via archived bucket versions) and q_table_delete
-        // reads the live head.
-        val delKeys = TableIO.readExtracted(s, tablePath)
-          .filter(pmod(xxhash64(col("conv_id")), lit(4)) === 2)
-          .map(_.conv_id).distinct()
-        delKeys.toDF("conv_id").coalesce(1)
-          .write.mode("overwrite").parquet(tableDeleteKeysPath)
-        TableIO.deleteConvs(delKeys, tablePath, buckets = 8)
-        // WRITE-AUDIT-PUBLISH last: branch at the post-delete head,
-        // stage a class-3 correction (+7000 — disjoint from the
-        // merge's class 0, the exp branch's class 1, and the delete's
-        // class 2), dump it for the oracle, fast-forward main. Every
-        // earlier q_table_* read now pins its snapshot explicitly, so
-        // they all exercise time travel THROUGH the publish;
-        // q_table_wap reads the published live head.
-        val (snapDel, _) = TableIO.committed(tablePath)
-        TableIO.createBranch(tablePath, "wap", snapDel)
-        val wapUpdates = TableIO.readExtracted(s, tablePath)
-          .filter(pmod(xxhash64(col("conv_id")), lit(4)) === 3)
-          .map(t => t.copy(total_score = t.total_score + 7000))
-        flat(wapUpdates.toDF).coalesce(1)
-          .write.mode("overwrite").parquet(tableWapUpdatesPath)
-        TableIO.mergeIntoBranch(wapUpdates, tablePath, "wap", buckets = 8)
-        TableIO.publishBranch(tablePath, "wap")
-        val (snapPub, _) = TableIO.committed(tablePath)
-        // MERGE-ON-READ equality delete LAST: a turn-level key subset
-        // (hash class 2 of "conv_id#turn_idx" mod 5 — finer than any
-        // conv-level class above, cutting across all of them), dumped
-        // BEFORE the delete so the oracle anti-joins independently.
-        // deleteTurnsMoR writes a delete FILE (no bucket rewritten);
-        // rewriteDeletes then materializes it (versions bump, records
-        // go inert) — so q_table_mor (as-of read: applies records over
-        // the now-archived versions) and q_table_mor_rewrite (live
-        // read of the folded bytes) must both hash-equal the SAME
-        // oracle, proving logical-apply ≡ materialized.
-        val morKeys = TableIO.readExtracted(s, tablePath).toDF
-          .filter(pmod(xxhash64(
-            concat_ws("#", col("conv_id"), col("turn_idx"))), lit(5)) === 2)
-          .select(col("conv_id"), col("turn_idx"))
-        morKeys.coalesce(1).write.mode("overwrite").parquet(tableMorKeysPath)
-        val snapMor = TableIO.deleteTurnsMoR(morKeys, tablePath, buckets = 8)
-        TableIO.rewriteDeletes(s, tablePath, buckets = 8)
-        val (snapRw, _) = TableIO.committed(tablePath)
-        // PARTITION EVOLUTION last: relayout 8 -> 16 hash buckets.
-        // Content-neutral by contract, so q_table_rebucket (live head,
-        // 16-bucket bytes) hash-equals the SAME oracle as q_table_mor
-        // (8-bucket archive + delete records) — three engine paths,
-        // one truth. Every pinned read above now time-travels through
-        // the rebucket via the archived old-spec versions.
-        TableIO.rebucket(s, tablePath, 16)
-        val b = TableBuild(tablePath, snapWave1, snapPre, snapPost, snapDel,
-          snapPub, snapMor, snapRw)
-        tableMemo.put(s, b)
-        b
-      }
+    tableMemo(s) {
+      import s.implicits._
+      import graft.io.TableIO
+      // checkpoint: the two wave writes + merge below each action
+      // this Dataset; un-cut, every one re-runs the full extraction
+      val extracted = graft.pipeline.Pipeline
+        .extractTurnsSalted(genWithSidecar(s), 32)
+        .localCheckpoint(true)
+      deleteRec(java.nio.file.Paths.get(tablePath))
+      TableIO.writeExtracted(extracted, tablePath, buckets = 8, waves = 2,
+        stopAfterWaves = 1)
+      val (snapWave1, _) = TableIO.committed(tablePath)
+      TableIO.writeExtracted(extracted, tablePath, buckets = 8, waves = 2)
+      val (snapPre, _) = TableIO.committed(tablePath)
+      // pre-merge sidecars (oracle inputs) — dumped before the merge
+      flat(TableIO.readExtracted(s, tablePath).toDF).coalesce(1)
+        .write.mode("overwrite").parquet(tableInitialPath)
+      flat(TableIO.readExtracted(s, tablePath, snapWave1).toDF).coalesce(1)
+        .write.mode("overwrite").parquet(tableWave1Path)
+      // the corrected subset: every conv whose hash lands in class 0
+      // (deterministic, ~1/4 of convs), score corrected +1000
+      val updates = TableIO.readExtracted(s, tablePath)
+        .filter(pmod(xxhash64(col("conv_id")), lit(4)) === 0)
+        .map(t => t.copy(total_score = t.total_score + 1000))
+      flat(updates.toDF).coalesce(1)
+        .write.mode("overwrite").parquet(tableUpdatesPath)
+      TableIO.mergeExtracted(updates, tablePath, buckets = 8)
+      val (snapPost, _) = TableIO.committed(tablePath)
+      // named refs on the same build: tag the pre-merge snapshot
+      // (time travel by name), and branch at the post-merge head with
+      // a branch-only corrected subset (hash class 1 — disjoint from
+      // the merge's class 0), dumped BEFORE the branch merge so the
+      // oracle composes the branch state independently
+      TableIO.tagSnapshot(tablePath, "pre-merge", snapPre)
+      TableIO.createBranch(tablePath, "exp", snapPost)
+      val branchUpdates = TableIO.readExtracted(s, tablePath)
+        .filter(pmod(xxhash64(col("conv_id")), lit(4)) === 1)
+        .map(t => t.copy(total_score = t.total_score + 5000))
+      flat(branchUpdates.toDF).coalesce(1)
+        .write.mode("overwrite").parquet(tableBranchUpdatesPath)
+      TableIO.mergeIntoBranch(branchUpdates, tablePath, "exp", buckets = 8)
+      // schema evolution BEFORE the delete: sinceSnapshot = snapPost,
+      // so the post-delete snapshot q_table_evolve pins (snapDel)
+      // already projects the added column — and the as-of read
+      // exercises the evolved-schema time-travel path THROUGH the
+      // later WAP publish
+      TableIO.evolveSchema(tablePath, "quality_tier", "STRING", "'unscored'")
+      // row-level DELETE on main (right-to-be-forgotten shape): every
+      // conv in hash class 2 — disjoint from the merge's class 0 and
+      // the branch's class 1 — with the key set dumped BEFORE the
+      // delete so the oracle anti-joins it independently. Runs LAST:
+      // q_table_merge then reads as-of snapPost (time travel THROUGH
+      // the delete via archived bucket versions) and q_table_delete
+      // reads the live head.
+      val delKeys = TableIO.readExtracted(s, tablePath)
+        .filter(pmod(xxhash64(col("conv_id")), lit(4)) === 2)
+        .map(_.conv_id).distinct()
+      delKeys.toDF("conv_id").coalesce(1)
+        .write.mode("overwrite").parquet(tableDeleteKeysPath)
+      TableIO.deleteConvs(delKeys, tablePath, buckets = 8)
+      // WRITE-AUDIT-PUBLISH last: branch at the post-delete head,
+      // stage a class-3 correction (+7000 — disjoint from the
+      // merge's class 0, the exp branch's class 1, and the delete's
+      // class 2), dump it for the oracle, fast-forward main. Every
+      // earlier q_table_* read now pins its snapshot explicitly, so
+      // they all exercise time travel THROUGH the publish;
+      // q_table_wap reads the published live head.
+      val (snapDel, _) = TableIO.committed(tablePath)
+      TableIO.createBranch(tablePath, "wap", snapDel)
+      val wapUpdates = TableIO.readExtracted(s, tablePath)
+        .filter(pmod(xxhash64(col("conv_id")), lit(4)) === 3)
+        .map(t => t.copy(total_score = t.total_score + 7000))
+      flat(wapUpdates.toDF).coalesce(1)
+        .write.mode("overwrite").parquet(tableWapUpdatesPath)
+      TableIO.mergeIntoBranch(wapUpdates, tablePath, "wap", buckets = 8)
+      TableIO.publishBranch(tablePath, "wap")
+      val (snapPub, _) = TableIO.committed(tablePath)
+      // MERGE-ON-READ equality delete LAST: a turn-level key subset
+      // (hash class 2 of "conv_id#turn_idx" mod 5 — finer than any
+      // conv-level class above, cutting across all of them), dumped
+      // BEFORE the delete so the oracle anti-joins independently.
+      // deleteTurnsMoR writes a delete FILE (no bucket rewritten);
+      // rewriteDeletes then materializes it (versions bump, records
+      // go inert) — so q_table_mor (as-of read: applies records over
+      // the now-archived versions) and q_table_mor_rewrite (live
+      // read of the folded bytes) must both hash-equal the SAME
+      // oracle, proving logical-apply ≡ materialized.
+      val morKeys = TableIO.readExtracted(s, tablePath).toDF
+        .filter(pmod(xxhash64(
+          concat_ws("#", col("conv_id"), col("turn_idx"))), lit(5)) === 2)
+        .select(col("conv_id"), col("turn_idx"))
+      morKeys.coalesce(1).write.mode("overwrite").parquet(tableMorKeysPath)
+      val snapMor = TableIO.deleteTurnsMoR(morKeys, tablePath, buckets = 8)
+      TableIO.rewriteDeletes(s, tablePath, buckets = 8)
+      val (snapRw, _) = TableIO.committed(tablePath)
+      // PARTITION EVOLUTION last: relayout 8 -> 16 hash buckets.
+      // Content-neutral by contract, so q_table_rebucket (live head,
+      // 16-bucket bytes) hash-equals the SAME oracle as q_table_mor
+      // (8-bucket archive + delete records) — three engine paths,
+      // one truth. Every pinned read above now time-travels through
+      // the rebucket via the archived old-spec versions.
+      TableIO.rebucket(s, tablePath, 16)
+      TableBuild(tablePath, snapWave1, snapPre, snapPost, snapDel,
+        snapPub, snapMor, snapRw)
     }
 
   /** One shared phased drive for the three stream-stream interval-join
@@ -367,97 +326,87 @@ object TrainingData {
   private case class StreamJoins(inner: DataFrame, outer: DataFrame,
       full: DataFrame, dedup: DataFrame, dedupSessions: DataFrame,
       twsSessions: DataFrame)
-  private val streamJoinMemo =
-    new java.util.LinkedHashMap[SparkSession, StreamJoins](4, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[SparkSession, StreamJoins]): Boolean = size() > 2
-    }
+  private val streamJoinMemo = new SessionMemo[SparkSession, StreamJoins](2)
 
   private def buildStreamJoins(s: SparkSession): StreamJoins =
-    streamJoinMemo.synchronized {
-      val cached = streamJoinMemo.get(s)
-      if (cached != null) cached
-      else {
-        import s.implicits._
-        import graft.streaming.StreamExtract
-        val corpus = synthShared(s, 200L, 4)
-        corpus.coalesce(1).write.mode("overwrite").parquet(streamJoinPath)
-        // the dedup flavor reads its OWN sidecar: the same corpus PLUS
-        // an exact-duplicate slice (hash class 0 convs) present in the
-        // FIRST micro-batch — the dedup state must collapse the copies
-        // (appending dupes to the join sidecar would corrupt the three
-        // join oracles, hence the separate path)
-        corpus.coalesce(1).write.mode("overwrite").parquet(streamDedupPath)
-        corpus.filter(t => math.abs(t.conv_id.hashCode % 5) == 0)
-          .coalesce(1).write.mode("append").parquet(streamDedupPath)
-        // Sentinel rows land in the sidecars BEFORE the queries start
-        // (one batch: corpus + far-future sentinels), and the
-        // watermark-expiry output (outer/full null tails, session and
-        // timer closes) materializes in Spark's NO-DATA flush batches
-        // after the watermark advances — processAllAvailable drains
-        // them. This replaced the 2-round sentinel-append phase loop:
-        // measured ~33 s → ~12 s for the 6-query drive (with the
-        // RocksDB split below), because each query now runs ONE data
-        // batch plus no-data flushes instead of 3 data batches with
-        // full state reloads between.
-        val maxTs = s.read.parquet(streamDedupPath)
-          .agg(max(col("ts"))).head().getTimestamp(0)
-        def sentinels(tag: String, plusMs: Long) = Seq(
-          graft.core.TurnInput(s"~sentinel-$tag", 0, "user", "", "",
-            new java.sql.Timestamp(maxTs.getTime + plusMs)),
-          graft.core.TurnInput(s"~sentinel-$tag", 1, "user", "", "",
-            new java.sql.Timestamp(maxTs.getTime + plusMs)))
-        val day = 24L * 3600 * 1000
-        for (p <- Seq(streamJoinPath, streamDedupPath);
-             (tag, plus) <- Seq(("a", 31L * day), ("b", 33L * day)))
-          s.createDataset(sentinels(tag, plus)).coalesce(1)
-            .write.mode("append").parquet(p)
-        // synth timestamps are hash-random across a year (not
-        // sequential within a conversation), so the attribution horizon
-        // is 30 days on every flavor
-        def src = StreamExtract.readTurnStream(s, streamJoinPath, streamJoinPath)
-        val seq = memSinkSeq.incrementAndGet()
-        // Five queries on the default (HDFS-backed) state store — at
-        // this 4-partition harness scale each RocksDB store instance
-        // costs more to instantiate than the state it holds, so only
-        // the transformWithState query (which REQUIRES RocksDB) pays
-        // for it, in its own drive right after. Production deployments
-        // flip the provider globally; the sbt suite covers both
-        // backends through this split.
-        val out = StreamExtract.runPhasedMulti(Seq(
-          (StreamExtract.openerJoin(src, horizon = "30 days"),
-            s"q_stream_join_$seq",
-            org.apache.spark.sql.streaming.OutputMode.Append()),
-          (StreamExtract.openerJoinOuter(src, horizon = "30 days"),
-            s"q_stream_join_outer_$seq",
-            org.apache.spark.sql.streaming.OutputMode.Append()),
-          (StreamExtract.openerJoinFull(src, horizon = "30 days"),
-            s"q_stream_join_full_$seq",
-            org.apache.spark.sql.streaming.OutputMode.Append()),
-          (StreamExtract.turnDedup(
-              StreamExtract.readTurnStream(s, streamDedupPath, streamDedupPath)),
-            s"q_stream_dedup_$seq",
-            org.apache.spark.sql.streaming.OutputMode.Append()),
-          (StreamExtract.dedupSessionWindows(
-              StreamExtract.readTurnStream(s, streamDedupPath, streamDedupPath)),
-            s"q_stream_dedup_sessions_$seq",
-            org.apache.spark.sql.streaming.OutputMode.Append())))()
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProv = s.conf.getOption(provKey)
-        s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider")
-        val tws = try StreamExtract.runPhasedMulti(Seq(
-          (StreamExtract.sessionsViaTws(src),
-            s"q_stream_tws_sessions_$seq",
-            org.apache.spark.sql.streaming.OutputMode.Append())))().head
-        finally prevProv match {
-          case Some(p) => s.conf.set(provKey, p)
-          case None    => s.conf.unset(provKey)
-        }
-        val b = StreamJoins(out(0), out(1), out(2), out(3), out(4), tws)
-        streamJoinMemo.put(s, b)
-        b
+    streamJoinMemo(s) {
+      import s.implicits._
+      import graft.streaming.StreamExtract
+      val corpus = synthShared(s, 200L, 4)
+      corpus.coalesce(1).write.mode("overwrite").parquet(streamJoinPath)
+      // the dedup flavor reads its OWN sidecar: the same corpus PLUS
+      // an exact-duplicate slice (hash class 0 convs) present in the
+      // FIRST micro-batch — the dedup state must collapse the copies
+      // (appending dupes to the join sidecar would corrupt the three
+      // join oracles, hence the separate path)
+      corpus.coalesce(1).write.mode("overwrite").parquet(streamDedupPath)
+      corpus.filter(t => math.abs(t.conv_id.hashCode % 5) == 0)
+        .coalesce(1).write.mode("append").parquet(streamDedupPath)
+      // Sentinel rows land in the sidecars BEFORE the queries start
+      // (one batch: corpus + far-future sentinels), and the
+      // watermark-expiry output (outer/full null tails, session and
+      // timer closes) materializes in Spark's NO-DATA flush batches
+      // after the watermark advances — processAllAvailable drains
+      // them. This replaced the 2-round sentinel-append phase loop:
+      // measured ~33 s → ~12 s for the 6-query drive (with the
+      // RocksDB split below), because each query now runs ONE data
+      // batch plus no-data flushes instead of 3 data batches with
+      // full state reloads between.
+      val maxTs = s.read.parquet(streamDedupPath)
+        .agg(max(col("ts"))).head().getTimestamp(0)
+      def sentinels(tag: String, plusMs: Long) = Seq(
+        graft.core.TurnInput(s"~sentinel-$tag", 0, "user", "", "",
+          new java.sql.Timestamp(maxTs.getTime + plusMs)),
+        graft.core.TurnInput(s"~sentinel-$tag", 1, "user", "", "",
+          new java.sql.Timestamp(maxTs.getTime + plusMs)))
+      val day = 24L * 3600 * 1000
+      for (p <- Seq(streamJoinPath, streamDedupPath);
+           (tag, plus) <- Seq(("a", 31L * day), ("b", 33L * day)))
+        s.createDataset(sentinels(tag, plus)).coalesce(1)
+          .write.mode("append").parquet(p)
+      // synth timestamps are hash-random across a year (not
+      // sequential within a conversation), so the attribution horizon
+      // is 30 days on every flavor
+      def src = StreamExtract.readTurnStream(s, streamJoinPath, streamJoinPath)
+      val seq = memSinkSeq.incrementAndGet()
+      // Five queries on the default (HDFS-backed) state store — at
+      // this 4-partition harness scale each RocksDB store instance
+      // costs more to instantiate than the state it holds, so only
+      // the transformWithState query (which REQUIRES RocksDB) pays
+      // for it, in its own drive right after. Production deployments
+      // flip the provider globally; the sbt suite covers both
+      // backends through this split.
+      val out = StreamExtract.runPhasedMulti(Seq(
+        (StreamExtract.openerJoin(src, horizon = "30 days"),
+          s"q_stream_join_$seq",
+          org.apache.spark.sql.streaming.OutputMode.Append()),
+        (StreamExtract.openerJoinOuter(src, horizon = "30 days"),
+          s"q_stream_join_outer_$seq",
+          org.apache.spark.sql.streaming.OutputMode.Append()),
+        (StreamExtract.openerJoinFull(src, horizon = "30 days"),
+          s"q_stream_join_full_$seq",
+          org.apache.spark.sql.streaming.OutputMode.Append()),
+        (StreamExtract.turnDedup(
+            StreamExtract.readTurnStream(s, streamDedupPath, streamDedupPath)),
+          s"q_stream_dedup_$seq",
+          org.apache.spark.sql.streaming.OutputMode.Append()),
+        (StreamExtract.dedupSessionWindows(
+            StreamExtract.readTurnStream(s, streamDedupPath, streamDedupPath)),
+          s"q_stream_dedup_sessions_$seq",
+          org.apache.spark.sql.streaming.OutputMode.Append())))()
+      val provKey = "spark.sql.streaming.stateStore.providerClass"
+      val prevProv = s.conf.getOption(provKey)
+      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
+        "state.RocksDBStateStoreProvider")
+      val tws = try StreamExtract.runPhasedMulti(Seq(
+        (StreamExtract.sessionsViaTws(src),
+          s"q_stream_tws_sessions_$seq",
+          org.apache.spark.sql.streaming.OutputMode.Append())))().head
+      finally prevProv match {
+        case Some(p) => s.conf.set(provKey, p)
+        case None    => s.conf.unset(provKey)
       }
+      StreamJoins(out(0), out(1), out(2), out(3), out(4), tws)
     }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   * executors are tuned (ActiveProcessorCount, adaptive heaps, warm-up,
   * registration gate) the multi-executor topology costs NOTHING —
   * 4 × 4-core executors sustain 0.99× of one JVM with the same 16
-  * threads, and FabricProbe excludes cross-process throttling — so the
+  * threads, and a cross-process control run (BASELINE.md round-2)
+  * excludes cross-process throttling — so the
   * raw single-box N→4N ratio (0.63–0.78) is bounded only by the one
   * socket's concave thread-throughput curve, which 4N separate
   * machines multiply by construction.

@@ -115,6 +115,45 @@ class PlanSpec extends SparkSuite {
     val qs = SparkEntry.queries.keySet
     val orphans = SparkEntry.oracleSql.keySet.diff(qs)
     assert(orphans.isEmpty, s"oracleSql keys without a query: $orphans")
+    // pinned registry fingerprint: every query name, sorted, with the
+    // SHA-256 of its oracle SQL ("-" when it has none); a refactor of
+    // the builders must leave both the registry and its oracles as is.
+    // The per-JVM sidecar root is masked before hashing.
+    val root = graft.queries.TrainingData.expectedTurnsPath.stripSuffix("/expected_turns")
+    def sha256(sql: String): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(sql.replace(root, "<oracle-root>").getBytes("UTF-8"))
+        .map(b => f"$b%02x").mkString
+    val now = qs.toSeq.sorted.map(q =>
+      q + "\t" + SparkEntry.oracleSql.get(q).map(sha256).getOrElse("-"))
+    val src = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/registry_fingerprint.tsv"), "UTF-8")
+    val pinned = try src.getLines().toSeq finally src.close()
+    assert(now == pinned,
+      s"registry drifted; not pinned: ${now.diff(pinned).take(10)}, " +
+        s"pinned but gone: ${pinned.diff(now).take(10)}")
+  }
+
+  test("kmeans memo eviction unpersists the evicted fit's vector dataset") {
+    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.storage.StorageLevel
+    // three fits in one session through a memo of two: the first goes
+    val dirs = (1 to 3).map { _ =>
+      val d = java.nio.file.Files.createTempDirectory("kmeans-memo")
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/embeddings.parquet"),
+        d.resolve("embeddings.parquet"))
+      d.toString
+    }
+    for (d <- dirs) Relational.queries("q_ann_kmeans")(spark, d)
+    // the fit's persisted vector frame, rebuilt over the same plan, so
+    // its storageLevel reads the fit's cache entry
+    def vectors(d: String) = spark.read.parquet(s"$d/embeddings.parquet")
+      .select(col("vec_id"),
+        expr("transform(embedding, x -> cast(round(x * 1000) as bigint))").as("v"))
+    assert(vectors(dirs(2)).storageLevel != StorageLevel.NONE,
+      "the newest fit's vectors are not cached: the probe no longer matches the fit")
+    assert(vectors(dirs(0)).storageLevel == StorageLevel.NONE,
+      "the evicted fit's vectors are still cached")
   }
 
   test("ordered output is invariant to input partitioning and the salt shuffle") {
